@@ -1,17 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.Locale
 object Bench {
+  /** The compact line's length cap: a 2000-char stdout tail minus sbt's
+    * trailing [success] line. */
+  val CompactBudget = 1450
+  /** Failed names the compact line lists; `failed_total` counts them all. */
+  val CompactFailed = 5
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
     // untimed warmup: absorbs one-time session costs (codegen compiler,
     // parquet committer, shuffle service init) so per-query numbers
     // measure the queries, not JVM warmup
@@ -48,36 +47,51 @@ object Bench {
       }.toMap
     }
     val best = names.map(n => n -> runs.map(_(n)._1).min)
-    val qs = best.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // "failed" makes a crash self-describing: a failed query's elapsed is
-    // meaningless, so a non-empty list invalidates the total for grading.
     val failed = names.filter(n => runs.exists(!_(n)._2))
-      .map(n => s"\"" + n + "\"").mkString("[", ",", "]")
-    val total = best.map(_._2).sum
     val repTotals = runs.map(_.values.map(_._1).sum)
-      .map(t => f"$t%.3f").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed":$failed,"reps":$reps,"agg":"min","rep_totals":$repTotals,"sf":"$sfDir"}"""
-    println(fullLine)
-    // The full-precision line above runs ~8 KB at 178 queries; a consumer
-    // that keeps only a stdout tail loses its head. Persist the complete
-    // record to a file and then print a COMPACT line LAST: same contract
-    // keys, 3-decimal times, total/failed/reps over ALL queries, but the
-    // per-query map holds only the most expensive entries that fit a
-    // 2000-char stdout tail (178 full names alone exceed 3 KB, so the
-    // whole map can never fit; the heavy queries are the ones whose
-    // timings carry information at bench scale).
     val fullFile = s"BENCH_FULL_c$cpus.json"
+    val (fullLine, compactLine) =
+      lines(best, failed, reps, repTotals, sfDir, fullFile)
+    println(fullLine)
     java.nio.file.Files.write(java.nio.file.Paths.get(fullFile),
       (fullLine + "\n").getBytes("UTF-8"))
     spark.stop() // before the compact line, so no engine logging trails it
-    def r3(v: Double) = f"$v%.3f"
+    println(compactLine)
+  }
+
+  /** The bench's (full, compact) JSON lines from per-query minimum
+    * seconds (`best`, in run order), the names of queries that failed in
+    * any rep, and each rep's raw total. Every number is written in
+    * `Locale.ROOT`, so the lines parse whatever the JVM's locale.
+    *
+    * The full line keeps every query at full precision and the whole
+    * `failed` list: "failed" makes a crash self-describing, since a
+    * failed query's elapsed is meaningless and a non-empty list
+    * invalidates the total for grading. At 178 queries it runs ~8 KB,
+    * and a consumer that keeps only a stdout tail loses its head, so
+    * `main` also writes it to `fullFile` and then prints the COMPACT
+    * line LAST: same contract keys, 3-decimal times, total/reps over
+    * ALL queries, `failed` capped at its first [[CompactFailed]] names
+    * plus `failed_total`, and a per-query map holding only the most
+    * expensive entries that fit [[CompactBudget]] (178 full names alone
+    * exceed 3 KB, so the whole map can never fit; the heavy queries are
+    * the ones whose timings carry information at bench scale). */
+  def lines(best: Seq[(String, Double)], failed: Seq[String], reps: Int,
+      repTotals: Seq[Double], sfDir: String, fullFile: String)
+      : (String, String) = {
+    def r3(v: Double) = "%.3f".formatLocal(Locale.ROOT, v)
+    def strs(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = best.map(_._2).sum
+    val qs = best.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val totals = repTotals.map(r3).mkString("[", ",", "]")
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed":${strs(failed)},"reps":$reps,"agg":"min","rep_totals":$totals,"sf":"$sfDir"}"""
     val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":{"""
-    def rest(k: Int) = s"""},"failed":$failed,"reps":$reps,"agg":"min",""" +
-      s""""rep_totals":$repTotals,"sf":"$sfDir","queries_total":${names.size},""" +
+    def rest(k: Int) = s"""},"failed":${strs(failed.take(CompactFailed))},""" +
+      s""""failed_total":${failed.size},"reps":$reps,"agg":"min",""" +
+      s""""rep_totals":$totals,"sf":"$sfDir","queries_total":${best.size},""" +
       s""""queries_in_line":$k,"full_json":"$fullFile"}"""
-    val budget = 1450 // < 2000-char tail minus sbt's trailing [success] line
     val sb = new StringBuilder(head)
     var k = 0
     val it = best.sortBy(-_._2).iterator
@@ -85,10 +99,11 @@ object Bench {
     while (it.hasNext && !full) {
       val (n, v) = it.next()
       val e = (if (k == 0) "" else ",") + "\"" + n + "\":" + r3(v)
-      if (sb.length + e.length + rest(k + 1).length <= budget) { sb.append(e); k += 1 }
-      else full = true
+      if (sb.length + e.length + rest(k + 1).length <= CompactBudget) {
+        sb.append(e); k += 1
+      } else full = true
     }
     sb.append(rest(k))
-    println(sb.toString)
+    (fullLine, sb.toString)
   }
 }

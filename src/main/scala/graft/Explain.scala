@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit utility.
   *
@@ -195,14 +194,7 @@ object Explain {
     val check = args.headOption.contains("--check")
     val rest = if (check) args.drop(1) else args
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     def plan(n: String): String =
       SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

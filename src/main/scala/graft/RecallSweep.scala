@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only ANN recall/cost sweep over the sign-LSH knobs (signBits ×
@@ -14,13 +13,7 @@ import org.apache.spark.sql.functions._
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
     val n = emb.count()
     val queries = emb.filter(col("vec_id") < 25)

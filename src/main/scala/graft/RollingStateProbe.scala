@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Dev-only state-write meter for [[graft.stream.Streamed
@@ -13,13 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * One JSON line per feed. */
 object RollingStateProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.streaming.checkpointLocation.deleteOnExit", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     import spark.implicits._
     val n = 100000
     val feeds = Seq(

@@ -199,14 +199,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val bigScale = sys.env.getOrElse("SPARK_GRAFT_PROBE_SCALE", "10").toInt
     // scale 1 would re-enter the 1× branch (clobbering cells) and make
@@ -956,8 +949,8 @@ object ScaleProbe {
           window = 3, k = 20, minCount = 5, scope = sc).count()
       }),
       // q104's exact shape — one cached explode, vocab-sized df
-      // aggregate, token-keyed join-back (the SkewProbe hazard under
-      // zipf words), bounded-heap top-k per doc
+      // aggregate, token-keyed join-back (the hot-key hazard under
+      // zipf words, SCALING.md round 14), bounded-heap top-k per doc
       "keywords_tfidf" -> (() => CacheScope.using { sc =>
         graft.ops.TextAnalysis.keywordsTopK(docs, "doc_id", col("text"),
           k = 3, scope = sc).count()

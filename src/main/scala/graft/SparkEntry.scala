@@ -67,8 +67,8 @@ object SparkEntry {
     graft.sources.Sources.scatter(table(s, dir, name))
 
   /** events has a TIMESTAMP(NANOS) ts column, which Spark only reads as
-    * LongType (spark.sql.legacy.parquet.nanosAsLong=true, set in
-    * Verify/Bench). Convert to a microsecond TIMESTAMP by exact integer
+    * LongType (spark.sql.legacy.parquet.nanosAsLong=true, set by
+    * [[LocalSession]]). Convert to a microsecond TIMESTAMP by exact integer
     * floor division — the same truncation DuckDB applies when it reads
     * nanos into its microsecond timestamps, so oracles agree. */
   def eventsDf(s: SparkSession, dir: String): DataFrame = {
@@ -520,7 +520,7 @@ object SparkEntry {
     * `knn_join_registered` confirms the exponent holds.
     *
     * r20: confirmed as the KNEE of a measured two-axis curve
-    * (`graft.FitFrontier`, SCALING.md "fit-fraction frontier"):
+    * (SCALING.md round 20, "Fit-fraction frontier"):
     * recall increments decelerate past 0.5 (+1,000 bp for 0.25→0.5,
     * +440 for 0.5→0.75, +200 for 0.75→1.0) while the fit-cost
     * increments grow with scale (0.5→1.0 = +38% of the fit at 30×,
@@ -935,8 +935,8 @@ object SparkEntry {
     * populated sign-cell: corpus population, seeds landed, covered
     * 0/1 — the per-corpus precondition check for the prefix seed rule
     * (on corpora whose id order correlates with content the prefix is
-    * NOT a stratified draw; `graft.SeedAudit` measures both shapes and
-    * SCALING.md records them). 4 sign bits per the operator's
+    * NOT a stratified draw; SCALING.md round 20, "Seed-stratification
+    * audit", measures both shapes). 4 sign bits per the operator's
     * granularity rule — 2^bits strata must not exceed the seed count,
     * or the report under-covers by construction (measured at 8 bits:
     * ~8600 bp "uncovered" on BOTH healthy and adversarial shapes —

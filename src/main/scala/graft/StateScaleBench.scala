@@ -53,18 +53,6 @@ object StateScaleBench {
       eps: Double, stateRows: Long, stateMemBytes: Long,
       custom: Map[String, Long])
 
-  private def mkSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Drive one topology and sample the state operator's telemetry from
     * the last progress entry that actually processed data (the final
     * `processAllAvailable` can leave a trailing no-data batch as
@@ -128,7 +116,7 @@ object StateScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = mkSession()
+    val spark = LocalSession()
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2000000").toInt
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_KEYS", "500000").toInt
     val b = sys.env.getOrElse("SPARK_GRAFT_SCALE_BATCHES", "10").toInt

@@ -28,18 +28,6 @@ import graft.stream.StreamCompiler
   * path (buffer vs no-buffer, same workload). */
 object StreamBench {
 
-  private def mkSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Drive one topology: feed `rows` to `topic` in `batches` chunks and
     * return events/sec (total events / wall elapsed). */
   private def drive(
@@ -82,7 +70,7 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = mkSession()
+    val spark = LocalSession()
     val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_N", "100000").toInt
     val k = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "1000").toInt
     val b = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt

@@ -35,8 +35,8 @@ final class ArgBuf(var pair: UnsafeRow)
   * buffer: ObjectHashAggregateExec plans it as hash-table grouping with
   * partial aggregation before the shuffle.
   *
-  * Execution regimes (measured, `graft.ArgmaxBench`; SCALING.md round
-  * 13): ObjectHashAggregateExec hash-processes up to
+  * Execution regimes (measured; SCALING.md round 13 addendum 3, "the
+  * argmax regime table"): ObjectHashAggregateExec hash-processes up to
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` groups
   * per task (Spark default 128 — deliberately tiny, because the object
   * map has NO spill accounting; raising it to millions was measured to

@@ -1188,9 +1188,7 @@ object Dedup {
     * lineage to the materialized blocks; on a cluster where executor
     * loss must be survivable, `spark.checkpoint` to reliable storage is
     * the durable variant. Throws if `maxIter` rounds don't converge —
-    * silently wrong clusters must never ship. Set `SPARK_GRAFT_CC_DEBUG`
-    * to log per-round label sums to stderr (convergence visibility on a
-    * long-running corpus job).
+    * silently wrong clusters must never ship.
     *
     * @param pairs    edge list with columns `a`, `b` (undirected)
     * @param vertices one column `idCol`; vertices absent from any pair
@@ -1286,8 +1284,6 @@ object Dedup {
       prevLabels = labels
       labels = next
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter sum=$curSum converged=$converged")
     }
     p.unpersist()
     if (!converged)

@@ -734,7 +734,8 @@ object Similarity {
     * A healthy prefix covers every heavy cell roughly ∝ population
     * (this fixture: id order interleaves the label clusters); an
     * id-sorted corpus leaves covered = 0 on every cell the prefix
-    * never reaches (the SCALING.md `SeedAudit` synthetic row) — the
+    * never reaches (the synthetic row of SCALING.md round 20,
+    * "Seed-stratification audit") — the
     * per-corpus signal to switch seed rules BEFORE paying a fit whose
     * recall the seeds have already capped (measured: bad seeds cost
     * −2,900 bp and Lloyd depth does not recover them).
@@ -793,8 +794,8 @@ object Similarity {
     * registered occupancy ([[graft.SparkEntry.TargetCellOcc]] = 64) the
     * boundary is crossed at ~262k corpus vectors.
     *
-    * RECALL BUDGET AT THE FLIP (r20, measured — `graft.Recall2L`,
-    * SCALING.md "two-level recall at the route boundary"): crossing
+    * RECALL BUDGET AT THE FLIP (r20, measured — SCALING.md round 20,
+    * "Two-level recall AT THE ROUTE BOUNDARY"): crossing
     * this boundary trades ≈1,000–1,250 bp of recall@10 at matched
     * nProbe (measured at BOTH occupancy 2 and the registered 64, 4096
     * cells, vs the flat assignment on brute-force truth) for a 5–6×

@@ -356,7 +356,8 @@ object TextAnalysis {
     * Scale shape: one cached explode; tf is a (doc, token)-keyed hash
     * aggregate; df aggregates the tf table to vocab size; N rides in
     * as a broadcast 1-row cross join; the df join-back keys on the
-    * token (the measured SkewProbe hazard: stopword keys — broadcast
+    * token (the hot-key hazard measured in SCALING.md round 14, "the
+    * hot-key skew note": stopword keys — broadcast
     * while vocab fits, salt beyond); the final top-k is the bounded
     * heap, k rows of state per doc per task. Output: idCol, token,
     * tfidf (6 dp), rank. */

@@ -15,17 +15,12 @@ class PlanGateSpec extends AnyFunSuite {
 
   test("every query's physical plan passes the scale gate") {
     val sfDir = "/root/testdata/sf0.001"
-    // events.parquet carries TIMESTAMP(NANOS) — readable only as long
-    // (the same conf Verify/Bench set at session build)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
-      val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { n =>
-        val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode)
-        Explain.violations(n, plan).map(v => s"$n: $v")
-      }
-      assert(failures.isEmpty, failures.mkString("\n"))
-    } finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { n =>
+      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      Explain.violations(n, plan).map(v => s"$n: $v")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("every query's emitted schema stays in the driver-safe type set") {
@@ -34,14 +29,11 @@ class PlanGateSpec extends AnyFunSuite {
     // round-trip) stays green — so the emitted-type vocabulary is pinned
     // to the set with round-green evidence, analysis-only at sf0.001
     val sfDir = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
-      val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { n =>
-        Explain.schemaViolations(n,
-          SparkEntry.queries(n)(spark, sfDir).schema).map(v => s"$n: $v")
-      }
-      assert(failures.isEmpty, failures.mkString("\n"))
-    } finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { n =>
+      Explain.schemaViolations(n,
+        SparkEntry.queries(n)(spark, sfDir).schema).map(v => s"$n: $v")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("the schema lint actually fires on a decimal output column") {

@@ -7,17 +7,7 @@ import org.apache.spark.sql.functions._
   * test-input shape: a list of (key, value, timestamp-millis) per topic
   * (willa `test_utils.clj:46-51`). */
 object TestKit {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(4)
 
   /** Record-shaped DF from (key, intValue, tsMillis) triples. */
   def records(rows: (String, Int, Long)*): DataFrame = {
