@@ -26,10 +26,8 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     // iteration aid: time a subset without paying for the whole suite
     // (the driver never sets this — full-suite totals stay comparable)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.selectQueries(SparkEntry.queries.keys,
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY"), "SPARK_GRAFT_BENCH_ONLY")
     val runs: Seq[Map[String, (Double, Boolean)]] = (1 to reps).map { _ =>
       names.map { name =>
         val t0 = System.nanoTime()

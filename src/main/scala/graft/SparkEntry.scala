@@ -620,11 +620,12 @@ object SparkEntry {
       .select(col("doc_id"), col("lang"), col("n_chars"))
 
   private def qSimIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = cpuTable(s, dir, "embeddings")
+    val raw = table(s, dir, "embeddings")
+    val emb = graft.sources.Sources.scatter(raw)
     // centroids are a model parameter (production: offline k-means —
     // see q156 for the FITTED variant); the 8 lowest-id corpus vectors
     // make the cell assignment deterministic and oracle-mirrorable.
-    val cents = seedCentroids(s, dir)
+    val cents = seedCentroids(raw)
     Similarity.ivfTopK(emb, "vec_id", "embedding",
       emb.filter(col("vec_id") < 5), "vec_id", "embedding",
       cents, k = 5, nProbe = 2)
@@ -1739,10 +1740,10 @@ object SparkEntry {
     * the narrow codegen cosine chain, the new centroids integer-exact
     * int8 sums, projected to the q61/q80 hash-stable facts. */
   private def qKmeansStep(s: SparkSession, dir: String): DataFrame = {
-    val cents = seedCentroids(s, dir)
+    val raw = table(s, dir, "embeddings")
     Similarity.kmeansStepInt8(
-      cpuTable(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-      "embedding", cents)
+      graft.sources.Sources.scatter(raw).select(col("vec_id"), col("embedding")),
+      "embedding", seedCentroids(raw))
       .select(col("cluster").cast("long").as("cluster"), col("n_vecs"),
         md5(array_join(transform(col("centroid_sum"), _.cast("string")), ","))
           .as("c_md5"),
@@ -2511,9 +2512,11 @@ object SparkEntry {
   }
 
   /** The 8 lowest-id corpus vectors as deterministic seed centroids —
-    * q37/q98's convention (a bounded 8-row model fetch). */
-  private def seedCentroids(s: SparkSession, dir: String): Seq[(Int, Array[Float])] =
-    table(s, dir, "embeddings").filter(col("vec_id") < 8)
+    * q37/q98's convention (a bounded 8-row model fetch). `embeddings` is
+    * the unscattered table read, which the caller shares with its own
+    * scan instead of reading the schema twice. */
+  private def seedCentroids(embeddings: DataFrame): Seq[(Int, Array[Float])] =
+    embeddings.filter(col("vec_id") < 8)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
 
@@ -2524,11 +2527,11 @@ object SparkEntry {
     * moves if ANY round's assignment flips anywhere — DuckDB confirms
     * the whole iteration exactly, the q113 discipline. */
   private def qKmeansFit(s: SparkSession, dir: String): DataFrame = {
-    val embs = cpuTable(s, dir, "embeddings")
+    val raw = table(s, dir, "embeddings")
+    val embs = graft.sources.Sources.scatter(raw)
       .select(col("vec_id"), col("embedding"))
     val fitted = CacheScope.session.model(("kmeansFit8", dir, corpusStamp(dir), 8, 2)) {
-      Similarity.kmeansFitInt8(embs, "embedding",
-        seedCentroids(s, dir), iters = 2)
+      Similarity.kmeansFitInt8(embs, "embedding", seedCentroids(raw), iters = 2)
     }
     Similarity.kmeansStepInt8(embs, "embedding", fitted)
       .select(col("cluster").cast("long").as("cluster"), col("n_vecs"),
@@ -2997,6 +3000,24 @@ object SparkEntry {
   }
 
   // ------------------------------------------------------------------ //
+
+  /** The registered names a comma-separated selection `only` (read from
+    * the env knob `knob`) picks, sorted; every name when `only` is
+    * None. Blank entries are ignored. A name that matches no registered
+    * query fails fast, naming every such entry: a typo must not shrink
+    * a run silently. */
+  def selectQueries(registered: Iterable[String], only: Option[String],
+      knob: String): Seq[String] = {
+    val all = registered.toSeq.sorted
+    only.fold(all) { spec =>
+      val want = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = want -- all
+      require(unknown.isEmpty,
+        s"$knob names unregistered queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      require(want.nonEmpty, s"$knob selects no query")
+      all.filter(want)
+    }
+  }
 
   /** The registered query surface. Deterministic, self-contained, and
     * side-effect-free per run — with one DOCUMENTED exception (r18

@@ -5,15 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-only subset knob (unset for a full verification run)
+    val names = SparkEntry.selectQueries(SparkEntry.queries.keys,
+      sys.env.get("SPARK_GRAFT_ONLY"), "SPARK_GRAFT_ONLY")
     val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
-    // dev-only subset knob (unset for the driver's full gate)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -20,9 +20,8 @@ import org.apache.spark.sql.types._
   * [[MarkerCountSum]] pattern).
   *
   * Semantics are IDENTICAL to the unfused form (oracle-hash-verified):
-  * scale = max |v_i| as double; q_i = HALF_UP(v_i·127/scale) via the
-  * same BigDecimal rounding Spark's `round` applies to doubles (zero
-  * vector → all-zero q); proj_j = Σ_i q_i·s_ij exact in Long. Output:
+  * scale and q_i are [[Int8Quant]]'s (max |v_i|, HALF_UP(v_i·127/scale),
+  * zero vector → all-zero q); proj_j = Σ_i q_i·s_ij exact in Long. Output:
   * struct(scale double, proj array<long>). Null vectors → null struct;
   * vector length must equal `dim` (fail-fast — a ragged corpus is a
   * data bug, not a projection choice). */
@@ -72,31 +71,14 @@ object JlProjectUtil {
       outDim: Int, isFloat: Boolean): InternalRow = {
     require(v.numElements() == dim,
       s"jl_project_int8: expected a $dim-dim vector, got ${v.numElements()}")
-    val d = new Array[Double](dim)
-    var i = 0
-    var s = 0.0
-    while (i < dim) {
-      d(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      val a = math.abs(d(i))
-      if (a > s) s = a
-      i += 1
-    }
     val q = new Array[Long](dim)
-    if (s != 0.0) {
-      i = 0
-      while (i < dim) {
-        // Spark round(double): BigDecimal HALF_UP on the exact binary value
-        q(i) = new java.math.BigDecimal(d(i) * 127.0 / s)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        i += 1
-      }
-    }
+    val s = Int8Quant.quantize(v, isFloat, q)
     val out = new Array[Long](outDim)
     var j = 0
     while (j < outDim) {
       val row = signs(j)
       var acc = 0L
-      i = 0
+      var i = 0
       while (i < dim) { acc += q(i) * row(i); i += 1 }
       out(j) = acc
       j += 1

@@ -141,7 +141,12 @@ case class TopKHash(
 
   override def merge(a: TopKBuf, b: TopKBuf): TopKBuf = {
     if (b.size == 0) a
-    else if (a.size == 0) { a.size = b.size; a.ids = b.ids; a.scores = b.scores; a }
+    else if (a.size == 0) { // copy, never adopt b's arrays: b may be reused
+      a.size = b.size
+      a.ids = java.util.Arrays.copyOf(b.ids, b.ids.length)
+      a.scores = java.util.Arrays.copyOf(b.scores, b.scores.length)
+      a
+    }
     else {
       // two sorted runs -> one sorted run capped at k; a's elements win
       // equal comparisons (same contents either way — the order is total

@@ -845,12 +845,14 @@ object Dedup {
       df: DataFrame, idCol: String, text: Column, n: Int,
       threshold: Double, maxDf: Long,
       scope: CacheScope = CacheScope.session): DataFrame = {
-    // The inverted index feeds three consumers (the df-cap aggregate and
-    // both sides of the pair self-join) — persist it through the caller's
-    // CacheScope so the explode runs once, not four times (measured 3×
-    // faster than recompute; at cluster scale the same role is played by
-    // checkpointing the index). Block lifetime is the scope's; size is
-    // bounded by the exploded index (rows × distinct shingles).
+    // The df-capped inverted index is built ONCE and persisted through
+    // the caller's CacheScope: both sides of the pair self-join scan it,
+    // and scope.cache materializes it in one pass before they fan out
+    // (otherwise they race to compute the same partitions — duplicate
+    // shingling + block-manager contention; the executor logs "Block
+    // already exists" and wall-clock spikes 3-4x). Block lifetime is the
+    // scope's; size is bounded by the exploded index (rows × distinct
+    // shingles).
     // Index key = 60-bit hash of the shingle, not the string: the joins
     // shuffle 8-byte longs instead of ~20-byte strings, and the oracle
     // mirrors the same md5-based hash so collisions (≈n²/2^60) are
@@ -858,21 +860,19 @@ object Dedup {
     // explode_outer + isnotnull for the same InferFiltersFromGenerate
     // reason as in minHashSignatures (single evaluation of the shingle
     // expression, above the scatter exchange).
-    // scope.cache materializes in ONE pass before fanning out: the df-cap
-    // aggregate and both pair-join sides otherwise race to compute the
-    // same partitions concurrently (duplicate shingling + block-manager
-    // contention; the executor logs "Block already exists" and wall-clock
-    // spikes 3-4x). One cheap count is the deterministic fix.
-    val sh = scope.cache(df.select(col(idCol).as("id"),
+    // df-cap: a count over the shingle's window rides the index's one
+    // shuffle on the shingle hash — no separate aggregate-and-join-back
+    // pass over the index — and leaves the cached index partitioned and
+    // sorted by that hash, the layout the self-join reads it in.
+    import org.apache.spark.sql.expressions.Window
+    val capped = scope.cache(df.select(col(idCol).as("id"),
         graft.functions.ShingleHashesFn(text, n).as("__shs"))
       .withColumn("nsh", size(col("__shs")))
       .select(col("id"), col("nsh"), explode_outer(col("__shs")).as("sh"))
-      .filter(col("sh").isNotNull))
-    // df-cap via hash aggregate + equi-join (partial aggregation shrinks
-    // the shuffle; no per-shingle sort)
-    val rare = sh.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxDf).select("sh")
-    val capped = sh.join(rare, "sh")
+      .filter(col("sh").isNotNull)
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+      .filter(col("__df") <= maxDf)
+      .select(col("sh"), col("id"), col("nsh")))
     val l = capped.select(col("sh"), col("id").as("a"), col("nsh").as("na"))
     val r = capped.select(col("sh"), col("id").as("b"), col("nsh").as("nb"))
     // length-ratio prune (lossless): J(A,B) <= min(|A|,|B|)/max(|A|,|B|),
@@ -1159,9 +1159,13 @@ object Dedup {
     * the persisted-once pair list against the current labels plus a
     * min-aggregate — all hash shuffles on vertex id, no collect.
     * Convergence is detected by the label SUM staying unchanged: labels
-    * only ever decrease, so an unchanged sum means no vertex moved — one
-    * aggregate per round instead of a join of consecutive label sets
+    * only ever decrease, so an unchanged sum means no vertex moved
     * (decimal(38,0) so billions of 64-bit ids cannot overflow the sum).
+    * The sum is not a separate action: an `Observation` rides each
+    * round's `localCheckpoint`, so the checkpoint's own job reports it.
+    * Its `CollectMetrics` node sits above the round's min-aggregate, in
+    * the result stage, where Spark counts each task's accumulator once
+    * even under task retry (a map-stage placement could double count).
     * Near-dup components are small dense cliques (diameter 1-2), so
     * this converges in 2-3 rounds of plain propagation. For adversarial
     * CHAIN graphs (boilerplate edited a little at a time — a≈b≈c≈…
@@ -1179,7 +1183,10 @@ object Dedup {
     * components (a label is always a same-component vertex id), so the
     * fixpoint is unchanged.
     * Shallow corpora never reach round 3, so their per-round plan
-    * stays one join + one aggregate.
+    * stays one join + one aggregate. Both directions of every pair come
+    * from ONE scan of the persisted pair list (a two-element explode),
+    * and the first checkpoint materializes that list, so a shallow
+    * graph runs one action per checkpoint plus the caller's.
     * Each round's labels are `localCheckpoint`ed: `persist`
     * caches DATA but keeps the logical plan, and the label plan
     * references itself twice per round — the plan tree doubles every
@@ -1203,20 +1210,29 @@ object Dedup {
     * @return (idCol, cluster) — cluster = min id in the component */
   def connectedComponents(pairs: DataFrame, vertices: DataFrame, idCol: String,
       maxIter: Int = 25): DataFrame = {
-    // persist the PAIR LIST, not the symmetrized view: both union legs
-    // below (and every propagation round) would otherwise recompute the
-    // caller's full pair pipeline — for near-dup input that is the whole
-    // LSH/index join, the most expensive thing in sight
+    // persist the PAIR LIST, not the symmetrized view: every propagation
+    // round would otherwise recompute the caller's full pair pipeline —
+    // for near-dup input that is the whole LSH/index join, the most
+    // expensive thing in sight. The first checkpoint below materializes
+    // it (one scan per plan, so nothing races to build the same blocks).
     val p = pairs.select(col("a"), col("b")).persist()
-    if (p.count() == 0) { // no edges: every vertex is its own cluster
-      p.unpersist()
-      return vertices.select(col(idCol), col(idCol).as("cluster"))
+    val sym = p.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+    // checkpoint a label table and read its label sum and row count off
+    // the checkpoint's own job
+    def checkpoint(df: DataFrame): (DataFrame, java.math.BigDecimal, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val cp = df.observe(obs,
+          coalesce(sum(col("cluster").cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)")).as("s"),
+          count(lit(1)).as("n"))
+        .localCheckpoint() // eager: materializes AND truncates lineage
+      val m = obs.get
+      (cp, m("s").asInstanceOf[java.math.BigDecimal],
+        m("n").asInstanceOf[Long])
     }
-    val sym = p.select(col("a").as("src"), col("b").as("dst"))
-      .union(p.select(col("b").as("src"), col("a").as("dst")))
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("cluster").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
     // propagate over the EDGE-TOUCHED subgraph only: in a near-dup
     // workload almost every document is in no pair at all, so the label
     // table each round shrinks from |V| to |V_with_edges|; singletons
@@ -1226,18 +1242,28 @@ object Dedup {
     // init plus round-1 join it replaces cost a full
     // join + checkpoint + convergence-sum cycle, and near-dup cliques
     // converge in 1-2 rounds so one round is a third of the loop
-    var labels = sym
+    val (init, initSum, touched) = checkpoint(sym
       .select(col("src").as(idCol), least(col("src"), col("dst")).as("cluster"))
-      .groupBy(col(idCol)).agg(min(col("cluster")).as("cluster"))
-      .localCheckpoint()
+      .groupBy(col(idCol)).agg(min(col("cluster")).as("cluster")))
+    if (touched == 0) { // no edges: every vertex is its own cluster
+      p.unpersist()
+      return vertices.select(col(idCol), col(idCol).as("cluster"))
+    }
+    var labels = init
     var prevLabels = labels // previous generation, for label-edge hand-off
-    var prevSum = labelSum(labels)
+    var prevSum = initSum
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      // one round = one equi-join + one min-aggregate: each vertex keeps
-      // its own label (the union's left leg) and adopts any smaller
-      // neighbor label; vertices without edges pass through untouched
+      // one round = one equi-join + one min-aggregate: each vertex takes
+      // the smallest label among its neighbors. Its own label needs no
+      // leg of its own, because some neighbor always holds a label no
+      // larger: a vertex labeled with its own id
+      // v has only neighbors labeled <= v; a label taken from a pair
+      // neighbor stays with that neighbor or shrinks there; and a label
+      // l taken over a label edge comes back over the pointer edge from
+      // vertex l, whose label is at most l. So every round computes
+      // exactly min(own, neighbors).
       // label-edge augmentation from round 3 on: plain propagation moves
       // a label ONE hop per round, so a duplicate CHAIN of diameter d
       // costs d rounds of full-edge joins (and trips maxIter past 25).
@@ -1275,10 +1301,8 @@ object Dedup {
       val fromNbrs = edges
         .join(labels.select(col(idCol).as("src"), col("cluster")), "src")
         .select(col("dst").as(idCol), col("cluster"))
-      val next = labels.union(fromNbrs)
-        .groupBy(col(idCol)).agg(min(col("cluster")).as("cluster"))
-        .localCheckpoint() // eager: materializes AND truncates lineage
-      val curSum = labelSum(next)
+      val (next, curSum, _) = checkpoint(fromNbrs
+        .groupBy(col(idCol)).agg(min(col("cluster")).as("cluster")))
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       prevLabels = labels

@@ -65,30 +65,24 @@ object Similarity {
     * (HALF_UP — both engines round doubles away from zero), so every
     * component lands in [−127, 127]; an all-zero vector quantizes to
     * zeros with scale 0 rather than NaN. One narrow per-row projection,
-    * no shuffle, no state — HOF lambdas (interpreted, but this is a
-    * once-per-row pass, not the all-pairs hot loop that justified the
-    * codegen [[graft.functions.CosineSim]]); the arithmetic is
-    * double-precision with a
-    * fixed operation order (`(v · 127) / scale`, max over
-    * double-widened floats) so an external engine replays the exact
-    * same doubles bit-for-bit.
+    * no shuffle, no state: one codegen call per row
+    * ([[graft.functions.QuantizeInt8]], the loop
+    * [[graft.functions.Int8Quant]] shares with the JL projection and the
+    * k-means update); the arithmetic is double-precision with a fixed
+    * operation order (`(v · 127) / scale`, max over double-widened
+    * floats) so an external engine replays the exact same doubles
+    * bit-for-bit. A NaN or infinite component fails the query.
     *
     * Output: the input columns plus `scale` (double) and `qvec`
     * (array<byte>). Downstream dot products are exact int arithmetic
     * (≤ 127²·dims fits a long); `cos(q_a, q_b)` approximates
     * `cos(a, b)` to ~1e-2 — rerank the short list at full precision
     * where that matters. */
-  def quantizeInt8(df: DataFrame, vecCol: String): DataFrame = {
-    val v = col(vecCol)
-    val s = aggregate(transform(v, x => abs(x.cast("double"))),
-      lit(0.0), (acc, x) => greatest(acc, x))
-    df.withColumn("scale", s)
-      .withColumn("qvec",
-        when(col("scale") === 0.0,
-          transform(v, _ => lit(0).cast("byte")))
-        .otherwise(transform(v,
-          x => round(x.cast("double") * 127.0 / col("scale"), 0).cast("byte"))))
-  }
+  def quantizeInt8(df: DataFrame, vecCol: String): DataFrame =
+    df.withColumn("__q8", graft.functions.QuantizeInt8Fn(col(vecCol)))
+      .withColumn("scale", col("__q8.scale"))
+      .withColumn("qvec", col("__q8.qvec"))
+      .drop("__q8")
 
   /** Reduce scored candidates to per-query top-k via the bounded-heap
     * [[graft.functions.TopKAggregator]]: partial aggregation trims each
@@ -559,14 +553,10 @@ object Similarity {
           col("__b.__sv").as("__sv"))
       // update: integer-exact int8 component sums cast to float (the
       // kmeansStepInt8 arithmetic, keyed by (parent, seed))
-      val upd = quantizeInt8(pick, "__sv")
-        .select(col("__key"), col("__scid"), posexplode(col("qvec")))
-        .groupBy(col("__key"), col("__scid"), col("pos"))
-        .agg(sum(col("col").cast("long")).as("__cd"))
-        .groupBy(col("__key"), col("__scid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("__cd")))),
-          x => x.getField("__cd")).as("__nv"))
+      val upd = pick.groupBy(col("__key"), col("__scid"))
+        .agg(graft.functions.Int8VecSum.sum(col("__sv")).as("__s"))
+        .filter(col("__s.n") > 0)
+        .select(col("__key"), col("__scid"), col("__s.sum"))
         .collect()
         .map(r => (r.getLong(0), r.getInt(1)) ->
           r.getSeq[Long](2).map(_.toFloat).toArray).toMap
@@ -1111,33 +1101,34 @@ object Similarity {
     * curation: every vector is assigned to its nearest centroid (the
     * [[ivfTopK]] assignment chain — narrow codegen, no shuffle), and
     * the new per-cluster centroids come back as INTEGER-EXACT
-    * int8-quantized component sums ([[centroidByGroup]]), so the
-    * iteration is deterministic under any partitioning — float
-    * mean-pooling would make every run's centroids (and the next
-    * round's assignments) drift with accumulation order. Null vectors
-    * are excluded. The whole step is ONE scan + a (clusters × dims)-
-    * sized aggregate: n_vecs rides the same (cluster, dim) partials
-    * (max over per-dim counts — exact, since a non-empty vector
-    * contributes to every one of its dims), so the assignment chain is
-    * never recomputed for a second counting pass; at 100 TB the
-    * exchange carries k·d rows per task, nothing else. Output:
-    * cluster, n_vecs, centroid_sum. */
+    * int8-quantized component sums, so the iteration is deterministic
+    * under any partitioning — float mean-pooling would make every run's
+    * centroids (and the next round's assignments) drift with
+    * accumulation order. Null vectors are excluded. The whole step is
+    * ONE scan + ONE aggregate ([[graft.functions.Int8VecSum]]: quantize
+    * and sum in the update, n_vecs in the same buffer), so after the
+    * caller's scatter a round plans exactly one exchange, carrying one
+    * dims-sized buffer per cluster per task. Output: cluster, n_vecs,
+    * centroid_sum. */
   def kmeansStepInt8(df: DataFrame, vecCol: String,
+      centroids: Seq[(Int, Array[Float])]): DataFrame =
+    lloydSums(df, vecCol, centroids)
+      .filter(col("__s.n") > 0)
+      .select(col("cluster"), col("__s.n").as("n_vecs"),
+        col("__s.sum").as("centroid_sum"))
+
+  /** [[kmeansStepInt8]]'s aggregate as it leaves the exchange: cluster,
+    * `__s` = struct(n, sum) — n is 0 for a cluster whose vectors are all
+    * empty. [[kmeansFitInt8]] collects it as is, so a fit round plans
+    * no stage after the final aggregate. */
+  private def lloydSums(df: DataFrame, vecCol: String,
       centroids: Seq[(Int, Array[Float])]): DataFrame = {
     require(centroids.size >= 2, s"need >= 2 centroids, got ${centroids.size}")
-    val assigned = df.filter(col(vecCol).isNotNull)
-      .select(nearestCentroid(col(vecCol), centroids).as("__cid"),
+    df.filter(col(vecCol).isNotNull)
+      .select(nearestCentroid(col(vecCol), centroids).as("cluster"),
         col(vecCol).as("__v"))
-    quantizeInt8(assigned, "__v")
-      .select(col("__cid"), posexplode(col("qvec")))
-      .groupBy(col("__cid"), col("pos"))
-      .agg(sum(col("col").cast("long")).as("__cd"),
-        count(lit(1)).as("__ct"))
-      .groupBy(col("__cid"))
-      .agg(max(col("__ct")).as("n_vecs"),
-        transform(array_sort(collect_list(struct(col("pos"), col("__cd")))),
-          x => x.getField("__cd")).as("centroid_sum"))
-      .select(col("__cid").as("cluster"), col("n_vecs"), col("centroid_sum"))
+      .groupBy(col("cluster"))
+      .agg(graft.functions.Int8VecSum.sum(col("__v")).as("__s"))
   }
 
   /** Fixed-iteration Lloyd fit: [[kmeansStepInt8]] looped `iters` times
@@ -1162,6 +1153,9 @@ object Similarity {
     * empty-cell rule). Fixed `iters`, idempotent once assignments
     * stabilize — oracles unroll the same rounds as CTEs (the q113/q140
     * discipline). Returns the fitted centroids in `init`'s shape.
+    * Each round is one Spark action: the scatter's map stage (when the
+    * caller scattered), then [[kmeansStepInt8]]'s one exchange and a
+    * k-row collect straight off the final aggregate.
     *
     * `fitFraction` < 1 trains each round on a DETERMINISTIC hash
     * sample of the corpus ([[Sampling.hashSample]] on `fitIdCol` with
@@ -1193,9 +1187,10 @@ object Similarity {
       else Sampling.hashSample(df, fitIdCol, fitFraction, fitSeed)
     var cents = init
     for (_ <- 1 to iters) {
-      val step = kmeansStepInt8(fitDf, vecCol, cents).collect()
-        .map(r => r.getInt(0) ->
-          r.getSeq[Long](2).map(_.toFloat).toArray).toMap
+      val step = lloydSums(fitDf, vecCol, cents).collect()
+        .map(r => r.getInt(0) -> r.getStruct(1))
+        .collect { case (cid, s) if s.getLong(0) > 0 =>
+          cid -> s.getSeq[Long](1).map(_.toFloat).toArray }.toMap
       cents = cents.map { case (cid, old) => (cid, step.getOrElse(cid, old)) }
     }
     cents
@@ -1343,30 +1338,22 @@ object Similarity {
     * |group| division is dropped rather than rounded — consumers divide
     * themselves if they need the mean, choosing their own precision).
     *
-    * Scale shape: one positional explode keyed (group, dim) into a
-    * two-level partially-aggregated sum — the exchange carries groups ×
-    * dims rows, not corpus × dims — then one collect-free reassembly to
-    * an array per group. Null vectors are excluded (counted in
-    * n_null). Output: `groupCol`, n_vecs, n_null, centroid_sum
-    * (array<long>, one element per dimension). */
+    * Scale shape: ONE aggregate per group ([[graft.functions.Int8VecSum]]
+    * next to the two counts) — the exchange carries one dims-sized
+    * buffer per group per task, not corpus × dims rows. Null vectors
+    * are excluded (counted in n_null); a group with no non-empty vector
+    * (or a null key) has no row. Output: `groupCol`, n_vecs, n_null,
+    * centroid_sum (array<long>, one element per dimension). */
   def centroidByGroup(df: DataFrame, groupCol: String,
-      vecCol: String): DataFrame = {
-    val q = quantizeInt8(
-      df.select(col(groupCol), col(vecCol).as("__v")), "__v")
-      .select(col(groupCol), col("qvec"))
-    val counts = df.groupBy(col(groupCol)).agg(
-      count(col(vecCol)).as("n_vecs"),
-      sum(when(col(vecCol).isNull, 1L).otherwise(0L)).as("n_null"))
-    q.filter(col("qvec").isNotNull)
-      .select(col(groupCol), posexplode(col("qvec")))
-      .groupBy(col(groupCol), col("pos"))
-      .agg(sum(col("col").cast("long")).as("__cd"))
+      vecCol: String): DataFrame =
+    df.filter(col(groupCol).isNotNull)
       .groupBy(col(groupCol))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("__cd")))),
-        x => x.getField("__cd")).as("centroid_sum"))
-      .join(counts, Seq(groupCol))
-      .select(col(groupCol), col("n_vecs"), col("n_null"), col("centroid_sum"))
-  }
+      .agg(count(col(vecCol)).as("n_vecs"),
+        sum(when(col(vecCol).isNull, 1L).otherwise(0L)).as("n_null"),
+        graft.functions.Int8VecSum.sum(col(vecCol)).as("__s"))
+      .filter(col("__s.n") > 0)
+      .select(col(groupCol), col("n_vecs"), col("n_null"),
+        col("__s.sum").as("centroid_sum"))
 
   /** Deterministic ±1 sign for Johnson–Lindenstrauss cell (i, j): the
     * parity of the engine's md5 [[graft.ops.Dedup.hash60]] of
@@ -1566,11 +1553,15 @@ object Similarity {
       queries: DataFrame, queryId: String, queryVec: String,
       k: Int, signBits: Int, probeHamming: Int = 0): DataFrame = {
     val bItems = items.withColumn("__bkt", signBucket(col(itemVec), signBits))
-    val probes = hammingProbes(signBucket(col(queryVec), signBits),
-      signBits, probeHamming)
+    // the query's own bucket is projected ONCE and the probes XOR that
+    // column: inlining the sign-bit CASE sum into every probe element
+    // (37 copies at 8 bits, Hamming 2) overflows the generated method
+    // and drops the stage to interpreted execution
     val bQueries = broadcast(queries.select(
-      col(queryId).as("qid"), col(queryVec).as("__qv"),
-      explode(probes).as("__bkt")))
+        col(queryId).as("qid"), col(queryVec).as("__qv"),
+        signBucket(col(queryVec), signBits).as("__own"))
+      .select(col("qid"), col("__qv"),
+        explode(hammingProbes(col("__own"), signBits, probeHamming)).as("__bkt")))
     val joined = bItems.join(bQueries, Seq("__bkt"))
       .withColumn("cos", cosine(col(itemVec), col("__qv")))
     topKReduce(joined, itemId, k)

@@ -33,8 +33,19 @@ object Sources {
     // throws) and micro-batches re-plan per trigger anyway — pass through.
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (numPartitions(df) < target) df.repartition(target) else df
   }
+
+  /** The partition count `df` scans with. A bare file scan reads it off
+    * the planned scan's input RDD; anything else asks `df.rdd`, which
+    * also plans (and compiles) a row-deserializer stage on the Spark
+    * driver. */
+  private def numPartitions(df: DataFrame): Int =
+    df.queryExecution.sparkPlan match {
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec =>
+        scan.inputRDD.getNumPartitions
+      case _ => df.rdd.getNumPartitions
+    }
 
   /** Batch topic source: parquet path → records. No scatter here: topic
     * reads feed shuffle-bound topology ops (joins/aggs re-spread at their

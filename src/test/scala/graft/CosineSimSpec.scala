@@ -79,6 +79,53 @@ class CosineSimSpec extends AnyFunSuite {
     assert(multi.size >= single.size) // probes only widen the candidate set
   }
 
+  private val probeItems = Seq.tabulate(400)(i =>
+    (i.toLong, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat / 6f)))
+
+  test("lshTopK (4 bits, Hamming 2) is the exact top-k over the probed cells") {
+    val items = probeItems.toDF("vec_id", "embedding")
+    val queries = items.filter(col("vec_id") < 6)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "id", "cos", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+        .toSeq.sorted
+    // reference: every pair whose sign cells differ in at most 2 bits,
+    // ranked by (cos desc, id asc)
+    val bucket = (c: String) => Similarity.signBucket(col(c), 4)
+    val want = items.select(col("vec_id").as("id"), col("embedding").as("iv"),
+        bucket("embedding").as("ib"))
+      .crossJoin(queries.select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        bucket("embedding").as("qb")))
+      .filter(bit_count(col("ib").bitwiseXOR(col("qb"))) <= 2)
+      .withColumn("cos", Similarity.cosine(col("iv"), col("qv")))
+      .withColumn("rank", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)).cast("long"))
+      .filter(col("rank") <= 5)
+    val got = Similarity.lshTopK(items, "vec_id", "embedding",
+      queries, "vec_id", "embedding", 5, signBits = 4, probeHamming = 2)
+    assert(canon(got) == canon(want))
+    assert(canon(got).size == 30)
+  }
+
+  test("lshTopK's probe expansion XORs the projected own cell, not the CASE sum") {
+    val items = probeItems.toDF("vec_id", "embedding")
+    val plan = Similarity.lshTopK(items, "vec_id", "embedding",
+      items.filter(col("vec_id") < 4), "vec_id", "embedding", 5,
+      signBits = 8, probeHamming = 2).queryExecution.optimizedPlan
+    val gens = plan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+        if g.generatorOutput.exists(_.name == "__bkt") => g
+    }
+    assert(gens.size == 1, plan.toString)
+    val gen = gens.head.generator
+    assert(gen.collect { case c: org.apache.spark.sql.catalyst.expressions.CaseWhen => c }.isEmpty,
+      gen.toString)
+    assert(gen.references.map(_.name).toSet == Set("__own"), gen.toString)
+    // 1 + 8 + 28 probe cells, each one XOR of the projected column
+    assert(gen.collect { case x: org.apache.spark.sql.catalyst.expressions.BitwiseXor => x }
+      .size == 36, gen.toString)
+  }
+
   test("IVF with nProbe = all cells equals brute force; fewer probes narrow it") {
     val items = Seq.tabulate(300)(i =>
       (i.toLong, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6).toFloat / 6f)))

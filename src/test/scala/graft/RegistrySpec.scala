@@ -17,4 +17,19 @@ class RegistrySpec extends AnyFunSuite {
     assert(oracles.collect { case (n, sql) if sql.trim.isEmpty => n }.isEmpty,
       "empty oracle SQL")
   }
+
+  test("query selection fails fast on names that match no registered query") {
+    val reg = Seq("q10_asof_left", "q47_neardup_clusters", "q155_kmeans_fit")
+    val knob = "SPARK_GRAFT_ONLY"
+    assert(SparkEntry.selectQueries(reg, None, knob) === reg.sorted)
+    assert(SparkEntry.selectQueries(reg, Some(" q47_neardup_clusters,,q10_asof_left "), knob) ===
+      Seq("q10_asof_left", "q47_neardup_clusters"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.selectQueries(reg, Some("q47_near_dup_cc,q10_asof_left,q9_x"), knob)
+    }
+    assert(e.getMessage.contains(knob))
+    assert(e.getMessage.contains("q47_near_dup_cc, q9_x"))
+    assert(!e.getMessage.contains("q10_asof_left"))
+    intercept[IllegalArgumentException](SparkEntry.selectQueries(reg, Some(" , "), knob))
+  }
 }

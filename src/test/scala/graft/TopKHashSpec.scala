@@ -87,4 +87,21 @@ class TopKHashSpec extends AnyFunSuite {
       .selectExpr("tk.id AS ids").as[Seq[Long]].head()
     assert(out === Seq(7L, 4L))
   }
+
+  test("merge into an empty buffer copies b's arrays, never aliases them") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val agg = TopKHash(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, DoubleType, nullable = true), k = 3)
+    val b = Seq((1L, 0.5), (2L, 0.9)).foldLeft(agg.createAggregationBuffer())(
+      (buf, r) => agg.update(buf, InternalRow(r._1, r._2)))
+    val a = agg.merge(agg.createAggregationBuffer(), b)
+    b.ids(0) = 99L
+    b.scores(0) = -1.0
+    agg.update(b, InternalRow(3L, 2.0))
+    assert(a.size === 2)
+    assert(a.ids.take(2).toSeq === Seq(2L, 1L))
+    assert(a.scores.take(2).toSeq === Seq(0.9, 0.5))
+  }
 }
