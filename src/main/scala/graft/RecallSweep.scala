@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.Models
 
 /** Dev-only ANN recall/cost sweep over the sign-LSH knobs (signBits ×
   * probeHamming) on the fixture embeddings — the measurement behind the
@@ -237,7 +238,7 @@ object RecallSweep {
           .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray))
           .toSeq.sortBy(_._1)
         val cents = graft.ops.Similarity.kmeansFitInt8(all, "embedding",
-          seeds, iters = 2, fitFraction = SparkEntry.SampleFitFraction,
+          seeds, iters = 2, fitFraction = Models.SampleFitFraction,
           fitIdCol = "vec_id", fitSeed = "ivf")
         if (nProbe <= cents.size) {
           val t0 = System.nanoTime()

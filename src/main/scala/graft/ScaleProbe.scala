@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{CacheScope, Dedup, Similarity}
+import graft.queries.Models
 
 /** Batch SCALE PROBE (round-12 verdict task 2): the driver fixtures stop
   * at sf0.1, so the per-round bench can never see how the expensive
@@ -161,21 +162,21 @@ object ScaleProbe {
   /** The ivf_model_build body, shared with the probe op's inline
     * build-when-missing: the REGISTERED geometry's fit verbatim (r19
     * seed rule — derived-count lowest FULL-corpus ids; fit on the
-    * [[SparkEntry.SampleFitFraction]] hash sample) plus the cells ×
+    * [[Models.SampleFitFraction]] hash sample) plus the cells ×
     * dims parquet write. Returns the cell count. */
   private def buildProbeIvfModel(embs: DataFrame, scale: Int): Int = {
     val sess = embs.sparkSession
     import sess.implicits._
     val n = embs.filter(col("embedding").isNotNull).count()
     val cells = math.max(2,
-      math.ceil(n / SparkEntry.TargetCellOcc.toDouble).toInt)
+      math.ceil(n / Models.TargetCellOcc.toDouble).toInt)
     val all = embs.select(col("vec_id"), col("embedding"))
     val seeds = all.orderBy(col("vec_id")).limit(cells)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray))
       .toSeq.sortBy(_._1)
     val cents = Similarity.kmeansFitInt8(all, "embedding", seeds,
-      iters = 2, fitFraction = SparkEntry.SampleFitFraction,
+      iters = 2, fitFraction = Models.SampleFitFraction,
       fitIdCol = "vec_id", fitSeed = "ivf")
     cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("cid", "cvec")
       .write.mode("overwrite").parquet(probeModelPath(scale))
@@ -216,7 +217,7 @@ object ScaleProbe {
     val MaxBucket = 1000L // LshMaxBucket, the registered queries' cap
 
     // the expensive-op families, each mirroring its registered query's
-    // exact parameters (SparkEntry q23/q24/q25/q46/q47/q53)
+    // exact parameters (q23/q24/q25/q46/q47/q53 in graft.queries)
     def ops(docs: DataFrame, embs: DataFrame, evs: DataFrame,
         scale: Int): Seq[(String, () => Long)] = Seq(
       "ngram_jaccard" -> (() => CacheScope.using { sc =>
@@ -273,7 +274,7 @@ object ScaleProbe {
         Similarity.knnJoin(embs, "vec_id", "embedding",
           k = 3, signBits = 8, probeHamming = 1, maxBucketOccupancy = MaxBucket,
           scope = sc, splitAbove = MaxBucket,
-          splitTargetOcc = SparkEntry.TargetCellOcc.toLong,
+          splitTargetOcc = Models.TargetCellOcc.toLong,
           subProbes = 2).count()
       }),
       // quantized coarse + fp rerank at the same fixed bits (q62's exact
@@ -285,7 +286,7 @@ object ScaleProbe {
           k = 3, signBits = 8, probeHamming = 1, coarseK = 10,
           maxBucketOccupancy = MaxBucket, scope = sc,
           splitAbove = MaxBucket,
-          splitTargetOcc = SparkEntry.TargetCellOcc.toLong,
+          splitTargetOcc = Models.TargetCellOcc.toLong,
           subProbes = 2).count()
       }),
       // q46's registered shape since r16 (fitted IVF, 32 cells, nProbe
@@ -357,19 +358,19 @@ object ScaleProbe {
           maxCellOccupancy = 0L, scope = sc).count()
       }),
       // q46's REGISTERED geometry since the r18 flip, verbatim: cells
-      // derived from the corpus count (ceil(n / 64) — SparkEntry
+      // derived from the corpus count (ceil(n / 64) — Models
       // TargetCellOcc), quantizer fit on the 25% hash sample (seeds =
       // the cells lowest-id sampled ids), GUARD ON at the registered
       // LshMaxBucket — this is the row that must complete with FULL
       // counts and a silent guard at 10×/30× where the fixed-32 shape
       // refused (r17 sweep; verdict task 1's Done criterion)
       "knn_join_registered" -> (() => CacheScope.using { sc =>
-        // constants referenced FROM SparkEntry (not re-hardcoded) so
+        // constants referenced FROM Models (not re-hardcoded) so
         // this row cannot silently drift from the shipped geometry if
         // a future round retunes the registered knobs (r18 review)
         val n = embs.filter(col("embedding").isNotNull).count()
         val cells = math.max(2,
-          math.ceil(n / SparkEntry.TargetCellOcc.toDouble).toInt)
+          math.ceil(n / Models.TargetCellOcc.toDouble).toInt)
         val all = embs.select(col("vec_id"), col("embedding"))
         // r19 registered rule: seeds = the derived-count lowest
         // FULL-CORPUS ids (the sampled-seed rule was the measured
@@ -379,7 +380,7 @@ object ScaleProbe {
           .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray))
           .toSeq.sortBy(_._1)
         val cents = Similarity.kmeansFitInt8(all, "embedding", seeds,
-          iters = 2, fitFraction = SparkEntry.SampleFitFraction,
+          iters = 2, fitFraction = Models.SampleFitFraction,
           fitIdCol = "vec_id", fitSeed = "ivf")
         Similarity.knnJoinIvf(embs, "vec_id", "embedding",
           k = 3, centroids = cents, nProbe = 4,
@@ -481,7 +482,7 @@ object ScaleProbe {
       "knn_join_auto" -> (() => CacheScope.using { sc =>
         val n = embs.filter(col("embedding").isNotNull).count()
         val cells = math.max(2,
-          math.ceil(n / SparkEntry.TargetCellOcc.toDouble).toInt)
+          math.ceil(n / Models.TargetCellOcc.toDouble).toInt)
         val all = embs.select(col("vec_id"), col("embedding"))
         // r19 registered rule: seeds = the derived-count lowest
         // FULL-CORPUS ids (the sampled-seed rule was the measured
@@ -491,17 +492,17 @@ object ScaleProbe {
           .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray))
           .toSeq.sortBy(_._1)
         val cents = Similarity.kmeansFitInt8(all, "embedding", seeds,
-          iters = 2, fitFraction = SparkEntry.SampleFitFraction,
+          iters = 2, fitFraction = Models.SampleFitFraction,
           fitIdCol = "vec_id", fitSeed = "ivf")
         val route = Similarity.annRouteFor(embs, "embedding", cents,
-          splitAbove = SparkEntry.SplitAbove)
+          splitAbove = Models.SplitAbove)
         println(s"""{"note":"ann_route","op":"knn_join_auto",""" +
           s""""scale":$scale,"cells":${cents.size},"route":"$route"}""")
         Similarity.knnJoinIvfAuto(embs, "vec_id", "embedding",
           k = 3, centroids = cents, nProbe = 4,
-          splitAbove = SparkEntry.SplitAbove,
-          targetOcc = SparkEntry.SplitTargetOcc,
-          splitIters = SparkEntry.SplitIters,
+          splitAbove = Models.SplitAbove,
+          targetOcc = Models.SplitTargetOcc,
+          splitIters = Models.SplitIters,
           maxCellOccupancy = MaxBucket, scope = sc).count()
       }),
       // the auto route ON THE DENSE FIXTURE (the verdict's Done
@@ -570,7 +571,7 @@ object ScaleProbe {
       "seed_coverage" -> (() => {
         val n = embs.filter(col("embedding").isNotNull).count()
         val cells = math.max(2,
-          math.ceil(n / SparkEntry.TargetCellOcc.toDouble).toInt)
+          math.ceil(n / Models.TargetCellOcc.toDouble).toInt)
         Similarity.seedCoverageReport(embs, "vec_id", "embedding",
           nSeeds = cells, signBits = 4).count()
       }),

@@ -1,8 +1,17 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The oracle map as one JSON object. Jackson escapes quotes,
+    * backslashes and every control character, so a tab or CR in an
+    * oracle string cannot make the file unreadable to the DuckDB
+    * compare that parses it. */
+  def oracleJson(oracles: Map[String, String]): String =
+    new ObjectMapper().writeValueAsString(oracles.asJava)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // dev-only subset knob (unset for a full verification run)
@@ -17,21 +26,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -8,65 +8,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 /** One scored candidate flowing into a top-k aggregation. */
 final case class Scored(id: Long, score: Double)
 
-/** Bounded top-k aggregate: keeps the k best (score desc, id asc) rows
-  * seen so far — O(k) state per group on every executor.
-  *
-  * Why this beats the window-rank top-k at scale: `row_number over
-  * (partition by qid order by score)` must shuffle EVERY scored row to
-  * the qid's partition and sort there; this Aggregator participates in
-  * partial aggregation, so each map task reduces its slice to k rows
-  * before the shuffle — the exchange carries k × tasks rows instead of
-  * the whole corpus, and no per-group sort of the full candidate set
-  * exists anywhere. Registered via `functions.udaf` (SURVEY §7.4's
-  * custom-aggregate path).
-  */
-final class TopKAggregator(k: Int) extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
-
-  // java.lang.Double.compare total order (NaN sorts above +∞, matching
-  // Spark's descending sort in the window-rank variant) so NaN scores —
-  // e.g. cosine of a zero vector — keep the buffer invariant intact and
-  // both top-k forms stay row-identical.
-  private def better(a: Scored, b: Scored): Boolean = {
-    val c = java.lang.Double.compare(a.score, b.score)
-    c > 0 || (c == 0 && a.id < b.id)
-  }
-
-  /** Insert keeping the buffer sorted best-first, truncated at k. */
-  private def insert(buf: Seq[Scored], x: Scored): Seq[Scored] = {
-    if (buf.size >= k && better(buf.last, x)) buf
-    else {
-      val (pre, post) = buf.span(better(_, x))
-      (pre :+ x) ++ post.take(k - pre.size - 1)
-    }
-  }
-
-  override def zero: Seq[Scored] = Vector.empty
-  override def reduce(buf: Seq[Scored], x: Scored): Seq[Scored] = insert(buf, x)
-  override def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
-    b.foldLeft(a)(insert)
-  override def finish(buf: Seq[Scored]): Seq[Scored] = buf
-  override def bufferEncoder: Encoder[Seq[Scored]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
-  override def outputEncoder: Encoder[Seq[Scored]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
-}
-
-/** Mutable top-k state: parallel primitive arrays sorted best-first
-  * ((score desc, id asc) — the [[TopKAggregator]] order), `size` live
-  * entries. Capacity is `k` from construction; [[TopKHash.merge]] swaps
-  * in freshly-merged arrays of length ≤ k. */
+/** Mutable top-k state: parallel primitive arrays sorted best-first by
+  * (score desc, id asc), `size` live entries. Capacity is `k` from
+  * construction; [[TopKHash.merge]] swaps in freshly-merged arrays of
+  * length ≤ k. */
 final class TopKBuf(var size: Int, var ids: Array[Long], var scores: Array[Double])
 
-/** [[TopKAggregator]] with a mutable primitive buffer — identical
-  * semantics (the k best (id, score) pairs by (score desc, id asc),
-  * `java.lang.Double.compare` total order so NaN sorts above +∞,
-  * duplicates kept, output array sorted best-first), but the update path
+/** Bounded top-k aggregate with a mutable primitive buffer — the
+  * semantics of the `udaf(Aggregator)` form it replaced (`TopKAggregator`,
+  * now TopKHashSpec's test-scope reference): the k best (id, score)
+  * pairs by (score desc, id asc), `java.lang.Double.compare` total order so NaN sorts above +∞,
+  * duplicates kept, output array sorted best-first; but the update path
   * allocates NOTHING per row: the `udaf(Aggregator)` form re-created an
   * immutable Vector node and boxed a `Scored` per input row and ran the
   * Seq encoder on every partial-buffer serialization. Both plan through
@@ -102,7 +59,7 @@ case class TopKHash(
         s"(${idExpr.dataType.sql}, ${scoreExpr.dataType.sql})")
 
   /** (idA, scoreA) strictly better than (idB, scoreB)? Same total order
-    * as [[TopKAggregator.better]]. */
+    * as the `TopKAggregator` reference. */
   private def better(idA: Long, scoreA: Double, idB: Long, scoreB: Double): Boolean = {
     val c = java.lang.Double.compare(scoreA, scoreB)
     c > 0 || (c == 0 && idA < idB)

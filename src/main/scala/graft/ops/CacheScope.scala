@@ -41,7 +41,7 @@ final class CacheScope private[ops] (tracking: Boolean) extends AutoCloseable {
     * once per consuming query (~1.3 s × 7 queries per pass, r16
     * verdict); a deployment fits once. Keying discipline: the key MUST
     * pin everything the fit reads — corpus identity (the sf dir AND a
-    * content fingerprint: `SparkEntry.corpusStamp` folds per-file
+    * content fingerprint: `graft.queries.Tables.corpusStamp` folds per-file
     * name/length/mtime into every session-scope key, so a harness that
     * regenerates data under the same dir changes the key — r17
     * ADVICE), the vector column, cell count, iteration count, sample

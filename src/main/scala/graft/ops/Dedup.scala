@@ -622,11 +622,6 @@ object Dedup {
     * arithmetic is exact in 64-bit on both Spark and DuckDB. */
   val MinHashP = 2147483647L
 
-  /** The k-th permutation hash of a shingle hash: `(a_k * h + b_k) mod p`
-    * with fixed odd multipliers. */
-  def permHash(h: Column, k: Int): Column =
-    ((h % MinHashP) * (2 * k + 1) + 12289L * (k + 1)) % MinHashP
-
   /** Per-doc MinHash signature: for each of `k` permutations, the min
     * permuted hash over the doc's shingles. Output: `idCol`, `sig`
     * (array<long> of length k), plus `nsh` (distinct shingle count).

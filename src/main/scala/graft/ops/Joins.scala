@@ -260,15 +260,6 @@ object Joins {
     if (inner) joined.filter(col(rightAs).isNotNull) else joined
   }
 
-  /** Stream–global-table broadcast join (#30-31): foreign-key lookup into
-    * a broadcast dimension (`streams.clj:104-112`); `lookupKey` is the
-    * kv-mapper expression over the stream side (`streams.clj:106`). */
-  def broadcastLookup(
-      stream: DataFrame, dim: DataFrame,
-      lookupKey: Column, dimKey: Column,
-      joinType: String = "inner"): DataFrame =
-    stream.join(broadcast(dim), lookupKey === dimKey, joinType)
-
   /** Skew-resistant equi-join for when BOTH sides are too big to
     * broadcast and the big side's key distribution is skewed: a hot key
     * hashes its entire partition onto one reducer, and that one task

@@ -28,8 +28,8 @@ object Keyed {
     * native `max_by`: its struct-typed declarative buffer can't mutate
     * inside an UnsafeRow, so HashAggregateExec rejects it and the plan
     * silently falls back to SortAggregate — a per-partition sort of the
-    * whole input. Use [[latestPerKeyRank]] when you need rank-window
-    * semantics.
+    * whole input. TopologyGenSpec checks it against a `row_number`
+    * window reference.
     */
   def latestPerKey(df: DataFrame, keyCols: Seq[String], order: Seq[Column]): DataFrame = {
     val rest = df.columns.filterNot(keyCols.contains)
@@ -37,18 +37,6 @@ object Keyed {
       .agg(graft.functions.ArgExtremum.maxBy(
         struct(rest.map(col): _*), struct(order: _*)).as("__last"))
       .select(keyCols.map(col) ++ rest.map(c => col(s"__last.`$c`").as(c)): _*)
-  }
-
-  /** Window-rank variant of [[latestPerKey]]: full per-key descending sort
-    * + `row_number = 1`. Keeps the input's column order and works when the
-    * order columns aren't struct-comparable. Costlier at scale (sort, no
-    * partial aggregation) — prefer [[latestPerKey]]. */
-  def latestPerKeyRank(df: DataFrame, keyCols: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(order.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
   }
 
   /** Running (changelog) aggregate: one output per input record carrying
@@ -106,25 +94,6 @@ object Keyed {
       case ae: AggregateExpression => WindowExpression(ae, spec)
     }
     df.withColumn(as, GraftBridge.column(rewritten))
-  }
-
-  /** Order-sensitive fold per key in `order` order — exact parity with the
-    * reference's adder fold (`experiment.clj:231-238`) for non-associative
-    * adders. `sort_array(collect_list(struct(order, value)))` then
-    * `aggregate()` (higher-order fn) folds in order. One shuffle; the
-    * per-key list must fit in memory — fine for table-state semantics
-    * (latest-ish cardinality), not for unbounded groups. */
-  def sortedFold(
-      df: DataFrame,
-      keyCols: Seq[String],
-      orderCol: Column,
-      valueCol: Column,
-      init: Column,
-      adder: (Column, Column) => Column,
-      as: String): DataFrame = {
-    val pairs = sort_array(collect_list(struct(orderCol.as("o"), valueCol.as("v"))))
-    df.groupBy(keyCols.map(col): _*)
-      .agg(aggregate(pairs, init, (acc, p) => adder(acc, p("v"))).as(as))
   }
 
   /** SCD-type-2 history compaction — turn an update stream into the

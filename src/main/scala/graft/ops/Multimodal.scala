@@ -100,14 +100,6 @@ object Multimodal {
       i => pmod(seed * 1009L + i * 9973L, lit(1000000L)).cast("double") / 1000000.0)
   }
 
-  /** Frame sampling for "video" payloads: every `stride`-th frame index up
-    * to nFrames (metadata-driven — no decode needed to plan the sample).
-    * Zero or corrupt (negative) frame counts yield an empty sample, not a
-    * phantom frame 0. */
-  def sampleFrameIdx(nFrames: Column, stride: Int): Column =
-    when(nFrames <= 0L, array().cast("array<bigint>"))
-      .otherwise(sequence(lit(0L), nFrames - 1L, lit(stride.toLong)))
-
   /** The imperative seam: run `kernel` over each partition's rows — this
     * is where a real JNI/FFI codec binds (one codec instance per
     * partition, batched I/O). The default kernel is the identity. Narrow

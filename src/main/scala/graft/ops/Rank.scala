@@ -11,7 +11,7 @@ object Rank {
 
   /** Top `n` rows per group by `scoreCol` descending (ties broken by
     * ascending `idCol`), via the bounded-heap
-    * [[graft.functions.TopKAggregator]]: each map task reduces its slice
+    * [[graft.functions.TopKHash]] aggregate: each map task reduces its slice
     * to n rows BEFORE the shuffle, so the exchange carries n × tasks rows
     * per group instead of every scored row the way `row_number() over
     * (partition by ... order by ...)` would — at 100 TB the window form

@@ -33,27 +33,13 @@ object Similarity {
     * refusing the regime where the job-launch overhead dominates. */
   val MmrDistributedMaxK = 25
 
-  /** Dot product of two float arrays in double precision (higher-order
-    * function form — interpreted lambda per element). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** L2 norm in double precision (HOF form). */
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
-
-  /** Cosine similarity via higher-order functions — kept as the readable
-    * reference implementation; bit-identical to [[cosine]]. */
-  def cosineHof(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 6)
-
   /** Cosine similarity, rounded to 6 dp (cross-engine stability).
     * Backed by the codegen'd [[graft.functions.CosineSim]] expression —
-    * ~20× faster than the HOF form on all-pairs workloads (HOF lambdas
-    * evaluate interpreted, outside whole-stage codegen) with identical
-    * results (same sequential double fold). */
+    * ~20× faster than a higher-order-function form on all-pairs
+    * workloads (HOF lambdas evaluate interpreted, outside whole-stage
+    * codegen) with identical results (same sequential double fold;
+    * CosineSimSpec checks it bit-for-bit against a test-scope HOF
+    * reference). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim(a, b)
 
@@ -85,7 +71,7 @@ object Similarity {
       .drop("__q8")
 
   /** Reduce scored candidates to per-query top-k via the bounded-heap
-    * [[graft.functions.TopKAggregator]]: partial aggregation trims each
+    * [[graft.functions.TopKHash]] aggregate: partial aggregation trims each
     * map task's slice to k rows BEFORE the shuffle, so the exchange
     * carries k × tasks rows — not the whole scored corpus like a
     * window-rank would. Ties broken by ascending id (deterministic). */
@@ -110,24 +96,6 @@ object Similarity {
       broadcast(queries.select(col(queryId).as("qid"), col(queryVec).as("__qv"))))
       .withColumn("cos", cosine(col(itemVec), col("__qv")))
     topKReduce(joined, itemId, k)
-  }
-
-  /** Window-rank form of [[bruteForceTopK]] — same results; shuffles all
-    * scored rows (kept for comparison and for rank-window semantics). */
-  def bruteForceTopKWindow(
-      items: DataFrame, itemId: String, itemVec: String,
-      queries: DataFrame, queryId: String, queryVec: String,
-      k: Int): DataFrame = {
-    val joined = items.crossJoin(
-      broadcast(queries.select(col(queryId).as("qid"), col(queryVec).as("__qv"))))
-      .withColumn("cos", cosine(col(itemVec), col("__qv")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col(itemId).asc)
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col(itemId).as("id"), col("cos"),
-        col("rank").cast("long").as("rank"))
   }
 
   /** IVF (inverted-file) approximate top-k: the corpus is partitioned
@@ -781,7 +749,7 @@ object Similarity {
     * 4096 sits at the conservative end of the measured 10³–10⁴
     * crossover band: the flat path never runs where the descent's win
     * is measured, and the descent never runs where its loss is. At the
-    * registered occupancy ([[graft.SparkEntry.TargetCellOcc]] = 64) the
+    * registered occupancy ([[graft.queries.Models.TargetCellOcc]] = 64) the
     * boundary is crossed at ~262k corpus vectors.
     *
     * RECALL BUDGET AT THE FLIP (r20, measured — SCALING.md round 20,

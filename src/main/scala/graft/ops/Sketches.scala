@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * engine-specific, so the sketch estimates themselves get unit-tested
   * error bounds against exact answers (AnalyticsOpsSpec); the driver's
   * q45 oracle covers [[profile]]'s deterministic columns only. A query
-  * with no `oracleSql` entry is entirely unattested by the driver (it
+  * with no oracle SQL is entirely unattested by the driver (it
   * has no rows-only fallback), so anything driver-facing must expose a
   * deterministic projection. */
 object Sketches {

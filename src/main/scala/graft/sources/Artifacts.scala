@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * once per (corpus fingerprint, dir), and every later probe reads the
   * files back — the amortization a deployment's ingest loop rests on.
   *
-  * Convention (registered in the `SparkEntry.queries` scaladoc too): a
+  * Convention (stated in the [[graft.SparkEntry.queries]] scaladoc too): a
   * query routed through [[ensureTable]] has a WRITE SIDE EFFECT on its
   * first run in a session catalog. The build is `synchronized` on this
   * object, so registered queries executing in PARALLEL in one driver
@@ -43,7 +43,7 @@ object Artifacts {
 
   /** Catalog table name pinning CORPUS IDENTITY: prefix + the content
     * fingerprint + a hash of the dir string. The dir hash matters
-    * because `SparkEntry.corpusStamp` stamps 0 for any non-local path
+    * because `graft.queries.Tables.corpusStamp` stamps 0 for any non-local path
     * (r18 ADVICE: two remote corpora in one catalog would otherwise
     * share a name and the second query would silently probe the
     * first's stale artifact); on local fixtures the stamp alone

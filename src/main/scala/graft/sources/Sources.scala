@@ -126,12 +126,6 @@ object Sources {
         .parquet(path),
       key, value, ts)
 
-  /** Rate source → records (synthetic keyed stream for soak tests). */
-  def rateStreamTopic(s: SparkSession, rowsPerSecond: Int, nKeys: Int): DataFrame =
-    Records.fromTable(
-      s.readStream.format("rate").option("rowsPerSecond", rowsPerSecond).load(),
-      pmod(col("value"), lit(nKeys)).cast("string"), col("value"), col("timestamp"))
-
   /** The serde half of [[kafkaStreamTopic]] — decode a Kafka WIRE-schema
     * DataFrame (`key`/`value` binary, `timestamp`) into records
     * (`streams.clj:12-14` serde decode ↔ `from_json` here). Factored out

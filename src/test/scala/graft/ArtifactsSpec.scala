@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Artifacts
+import graft.queries.{Models, Tables}
 
 /** [[graft.sources.Artifacts]] — build-once vs refresh semantics plus
   * the r19 verdict-2 coupling: a drift-triggered refit must reach every
@@ -76,9 +77,9 @@ class ArtifactsSpec extends AnyFunSuite {
     // so NOTHING in the memo keys moves when the corpus bytes change
     val dir = "file:" + base
     writeCorpus(s"$base/embeddings.parquet", shift = 0f)
-    val tbl = SparkEntry.ivfModelTable(dir)
+    val tbl = Models.ivfModelTable(dir)
 
-    val c1 = SparkEntry.registeredCentroids(spark, dir)
+    val c1 = Models.registeredCentroids(spark, dir)
     // q174 persists the artifact (build-once); q169/q173 populate their
     // derived-index memos against the v1 model
     SparkEntry.queries("q174_knn_persisted")(spark, dir).collect()
@@ -89,15 +90,15 @@ class ArtifactsSpec extends AnyFunSuite {
     // memo serves the v1 model (the documented pre-refit hazard, pinned
     // here so the refit's effect below is provably the generation's)
     writeCorpus(s"$base/embeddings.parquet", shift = 4f)
-    val stale = SparkEntry.registeredCentroids(spark, dir)
+    val stale = Models.registeredCentroids(spark, dir)
     assert(stale.map(_._2.toSeq) === c1.map(_._2.toSeq),
       "without a refit the stamp-0 memo is stale by construction")
 
-    SparkEntry.refitIvfModel(spark, dir)
+    Models.refitIvfModel(spark, dir)
     assert(Artifacts.generation(tbl) === 1L)
 
     // the fit memo re-derived on the drifted corpus
-    val c2 = SparkEntry.registeredCentroids(spark, dir)
+    val c2 = Models.registeredCentroids(spark, dir)
     assert(c2.map(_._2.toSeq) !== c1.map(_._2.toSeq),
       "refit must re-run the fit on the drifted corpus")
     // the persisted artifact serves the refreshed geometry
@@ -109,13 +110,13 @@ class ArtifactsSpec extends AnyFunSuite {
 
     // q173's derived-index memo carries the generation: the re-run must
     // equal a FRESH (memo-free) auto join over the refreshed model
-    val corpus = SparkEntry.cpuTable(spark, dir, "embeddings")
+    val corpus = Tables.cpuTable(spark, dir, "embeddings")
     val expectAuto = rowSet(graft.ops.Similarity.knnJoinIvfAuto(
       corpus, "vec_id", "embedding", k = 3, centroids = c2,
-      nProbe = SparkEntry.IvfProbe, splitAbove = SparkEntry.SplitAbove,
-      targetOcc = SparkEntry.SplitTargetOcc,
-      splitIters = SparkEntry.SplitIters,
-      maxCellOccupancy = SparkEntry.LshMaxBucket))
+      nProbe = Models.IvfProbe, splitAbove = Models.SplitAbove,
+      targetOcc = Models.SplitTargetOcc,
+      splitIters = Models.SplitIters,
+      maxCellOccupancy = Models.LshMaxBucket))
     val autoPost = rowSet(SparkEntry.queries("q173_knn_auto")(spark, dir))
     assert(autoPost === expectAuto,
       "post-refit q173 must serve the refreshed derived index")
@@ -126,11 +127,11 @@ class ArtifactsSpec extends AnyFunSuite {
     val expectSplit = rowSet(graft.ops.Similarity.knnJoinIvf(
       corpus, "vec_id", "embedding", k = 3,
       centroids = graft.ops.Similarity.refineHotCells(corpus, "vec_id",
-        "embedding", c2, splitAbove = SparkEntry.SplitAbove,
-        targetOcc = SparkEntry.SplitTargetOcc,
-        iters = SparkEntry.SplitIters),
-      nProbe = SparkEntry.IvfProbe,
-      maxCellOccupancy = SparkEntry.LshMaxBucket))
+        "embedding", c2, splitAbove = Models.SplitAbove,
+        targetOcc = Models.SplitTargetOcc,
+        iters = Models.SplitIters),
+      nProbe = Models.IvfProbe,
+      maxCellOccupancy = Models.LshMaxBucket))
     assert(rowSet(SparkEntry.queries("q169_knn_split")(spark, dir))
       === expectSplit)
 

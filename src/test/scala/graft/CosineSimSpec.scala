@@ -23,7 +23,7 @@ class CosineSimSpec extends AnyFunSuite {
   test("native expression matches HOF cosine bit-for-bit") {
     val pairs = vecs.as("a").crossJoin(vecs.as("b"))
       .select(col("a.id").as("ia"), col("b.id").as("ib"),
-        Similarity.cosineHof(col("a.v"), col("b.v")).as("hof"),
+        References.cosineHof(col("a.v"), col("b.v")).as("hof"),
         CosineSim(col("a.v"), col("b.v")).as("native"))
     val rows = pairs.collect()
     assert(rows.length == 16)
@@ -53,7 +53,7 @@ class CosineSimSpec extends AnyFunSuite {
         .toSeq.sorted
     val heap = Similarity.bruteForceTopK(items, "vec_id", "embedding",
       queries, "vec_id", "embedding", 7)
-    val window = Similarity.bruteForceTopKWindow(items, "vec_id", "embedding",
+    val window = References.bruteForceTopKWindow(items, "vec_id", "embedding",
       queries, "vec_id", "embedding", 7)
     assert(canon(heap) == canon(window))
     assert(canon(heap).size == 21)
@@ -159,7 +159,7 @@ class CosineSimSpec extends AnyFunSuite {
       .toDF("id", "a", "b")
     val out = ragged.select(col("id"),
       CosineSim(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof"))
+      References.cosineHof(col("a"), col("b")).as("hof"))
       .collect().map(r => r.getLong(0) -> (r.isNullAt(1), r.isNullAt(2))).toMap
     assert(out == Map(1L -> (false, false), 2L -> (true, true)))
   }
@@ -175,7 +175,7 @@ class CosineSimSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
     val heap = Similarity.bruteForceTopK(items, "vec_id", "embedding",
       queries, "vec_id", "embedding", 5)
-    val window = Similarity.bruteForceTopKWindow(items, "vec_id", "embedding",
+    val window = References.bruteForceTopKWindow(items, "vec_id", "embedding",
       queries, "vec_id", "embedding", 5)
     assert(canon(heap) == canon(window))
   }

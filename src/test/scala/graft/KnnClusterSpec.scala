@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, Similarity}
+import graft.queries.{Models, Tables}
 
 /** kNN join must equal the window-rank form over the same multi-probe
   * candidate set; connected components must produce min-reachable-id
@@ -795,11 +796,11 @@ class KnnClusterSpec extends AnyFunSuite {
       "arm IS the registered two-level join (one truth, two plans), and " +
       "the route provably reads two_level at the lowered boundary") {
     val dir = "/root/testdata/sf0.001"
-    val cents = SparkEntry.registeredCentroids(spark, dir)
+    val cents = Models.registeredCentroids(spark, dir)
     // q177's boundary knob (IvfCells = 32) vs the q166-base fitted list:
     // the route is a driver-side size check — no corpus job
     assert(Similarity.annRouteFor(
-      SparkEntry.cpuTable(spark, dir, "embeddings"), "embedding",
+      Tables.cpuTable(spark, dir, "embeddings"), "embedding",
       (0 until 32).map(i => i -> Array(i.toFloat, 1f)),
       splitAbove = Long.MaxValue, twoLevelAtCells = 32) === "two_level")
     val a = SparkEntry.queries("q177_knn_auto_two_level")(spark, dir)

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Query
 
 /** Every registered query is paired with its DuckDB oracle: Verify
   * writes `oracle_sql.json` from [[SparkEntry.oracleSql]] and one
@@ -31,5 +34,30 @@ class RegistrySpec extends AnyFunSuite {
     assert(e.getMessage.contains("q47_near_dup_cc, q9_x"))
     assert(!e.getMessage.contains("q10_asof_left"))
     intercept[IllegalArgumentException](SparkEntry.selectQueries(reg, Some(" , "), knob))
+  }
+
+  test("the registry fails fast on a duplicate query name") {
+    val build = (_: org.apache.spark.sql.SparkSession, _: String) =>
+      throw new AssertionError("no builder runs")
+    val e = intercept[IllegalArgumentException] {
+      Query.byName(Seq(Query("q1_a", Query.Light, "SELECT 1")(build),
+        Query("q2_b", Query.Heavy, "SELECT 2")(build),
+        Query("q1_a", Query.Heavy, "SELECT 3")(build)))
+    }
+    assert(e.getMessage.contains("q1_a"))
+    assert(!e.getMessage.contains("q2_b"))
+  }
+
+  test("every name the plan gate must broadcast is registered") {
+    assert((Explain.MustBroadcast.toSet -- SparkEntry.queries.keySet).isEmpty)
+  }
+
+  test("oracle_sql.json parses back to exactly the oracle map") {
+    def parse(json: String): Map[String, String] =
+      new ObjectMapper().readValue(json, classOf[java.util.Map[String, String]])
+        .asScala.toMap
+    assert(parse(Verify.oracleJson(SparkEntry.oracleSql)) == SparkEntry.oracleSql)
+    val odd = Map("q_odd" -> "a\tb\rc\u0001d\"e\\f\ng")
+    assert(parse(Verify.oracleJson(odd)) == odd)
   }
 }

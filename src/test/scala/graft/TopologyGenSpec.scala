@@ -314,7 +314,7 @@ class TopologyGenSpec extends AnyFunSuite {
     def canon(out: org.apache.spark.sql.DataFrame) =
       out.select("key", "value").collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
     val hashAgg = graft.ops.Keyed.latestPerKey(df, Seq("key"), Seq(col("ts")))
-    val rank = graft.ops.Keyed.latestPerKeyRank(df, Seq("key"), Seq(col("ts")))
+    val rank = References.latestPerKeyRank(df, Seq("key"), Seq(col("ts")))
     assert(canon(hashAgg) == canon(rank))
     assert(canon(hashAgg) == Seq(("j", 7), ("k", 9)))
   }
