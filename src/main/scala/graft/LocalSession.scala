@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * `local[cpus]` with one shuffle partition per core, UTC session time,
   * the UI off and WARN logging. `spark.sql.legacy.parquet.nanosAsLong`
   * is on because `events.parquet` carries TIMESTAMP(NANOS), which Spark
-  * reads only as a long ([[SparkEntry.eventsDf]] converts it). */
+  * reads only as a long ([[SparkEntry.eventsDf]] converts it). Streaming
+  * queries checkpoint through [[graft.stream.CheckpointFiles]]' fork-free
+  * manager unless a manager class is already configured. */
 object LocalSession {
 
   /** `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
@@ -28,6 +30,7 @@ object LocalSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.stream.CheckpointFiles.install(spark)
     spark
   }
 }

@@ -382,16 +382,10 @@ object Dedup {
     require(minDocs >= 2, s"minDocs >= 2, got $minDocs")
     val base = df.select(col(idCol), split(text, " ").as("__ws"))
       .filter(col("__ws").isNotNull)
-    val nRaw = (size(col("__ws")) - lit(n - 1)).cast("long")
-    val nPos = when(nRaw > MaxChunksPerDoc,
-      raise_error(concat(
-        lit(s"spanCutDedup: more than $MaxChunksPerDoc positions in doc "),
-        col(idCol).cast("string"))).cast("long"))
-      .otherwise(nRaw)
     val shingled = scope.cache(base
       .filter(size(col("__ws")) >= n)
       .select(col(idCol), col("__ws"),
-        explode(sequence(lit(1L), nPos)).as("pos"))
+        explode(sequence(lit(1L), shinglePositions("spanCutDedup", idCol, n))).as("pos"))
       .withColumn("__k",
         md5(array_join(slice(col("__ws"), col("pos").cast("int"), lit(n)), " ")))
       .withColumn("__dp",
@@ -417,6 +411,20 @@ object Dedup {
           coverPositions(col("__ops"), n)).as("__cut"))
       .filter(size(col("__cut")) > 0)
     cutAndReassemble(base, cutArrs, idCol)
+  }
+
+  /** The number of `n`-token shingle positions of each `__ws` words array,
+    * as a long, failing fast (naming the document) past
+    * [[MaxChunksPerDoc]]: the span-cut family's memory guard, evaluated
+    * before the positional explode so a huge document never expands, and
+    * the bound [[spanCutDedup]]'s packed owner key relies on. */
+  private def shinglePositions(op: String, idCol: String, n: Int): Column = {
+    val nRaw = (size(col("__ws")) - lit(n - 1)).cast("long")
+    when(nRaw > MaxChunksPerDoc,
+      raise_error(concat(
+        lit(s"$op: more than $MaxChunksPerDoc positions in doc "),
+        col(idCol).cast("string"))).cast("long"))
+      .otherwise(nRaw)
   }
 
   /** Distinct 1-based token positions covered by the `n`-token runs
@@ -500,8 +508,8 @@ object Dedup {
     // materializing a single-consumer explode costs a full extra pass
     val shingled = base
       .filter(size(col("__ws")) >= n)
-      .select(col(idCol), col("__ws"),
-        explode(sequence(lit(1), size(col("__ws")) - lit(n - 1))).as("pos"))
+      .select(col(idCol), col("__ws"), explode(sequence(lit(1),
+        shinglePositions("spanCutAgainst", idCol, n).cast("int"))).as("pos"))
       .withColumn("__k",
         md5(array_join(slice(col("__ws"), col("pos"), lit(n)), " ")))
     val cutArrs = shingled.join(refKeys, Seq("__k"), "left_semi")
@@ -549,8 +557,8 @@ object Dedup {
     // (see [[spanCutAgainst]])
     val shingled = base
       .filter(size(col("__ws")) >= n)
-      .select(col(idCol), col("__ws"),
-        explode(sequence(lit(1), size(col("__ws")) - lit(n - 1))).as("pos"))
+      .select(col(idCol), col("__ws"), explode(sequence(lit(1),
+        shinglePositions("spanCutAgainstIndex", idCol, n).cast("int"))).as("pos"))
       .withColumn("__k",
         md5(array_join(slice(col("__ws"), col("pos"), lit(n)), " ")))
     val cutArrs = shingled

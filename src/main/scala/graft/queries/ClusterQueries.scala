@@ -91,19 +91,15 @@ object ClusterQueries {
     * to the standing three quarters (vec_id % 4 ≠ 0, 43 lowest-id
     * standing seeds ⇒ 32 cells), memoized like [[fittedCentroids]]:
     * both maintenance queries replay the same model history, so the
-    * fit is keyed once per corpus. */
+    * fit is keyed once per corpus. The seeds and the fit share one read
+    * of `embeddings`, as in [[Models.fittedCentroids]]. */
   private def standingCentroids(s: SparkSession, dir: String): Seq[(Int, Array[Float])] =
     CacheScope.session.model(("standingCentroids", dir,
       corpusStamp(dir), 43, 2)) {
-      val seeds = table(s, dir, "embeddings")
-        .filter(col("vec_id") % 4 =!= 0 && col("vec_id") < 43)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray))
-        .toSeq.sortBy(_._1)
-      Similarity.kmeansFitInt8(
-        table(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0)
-          .select(col("vec_id"), col("embedding")),
-        "embedding", seeds, iters = 2)
+      val standing = table(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0)
+        .select(col("vec_id"), col("embedding"))
+      Similarity.kmeansFitInt8(standing, "embedding",
+        seedCentroids(standing, 43), iters = 2)
     }
 
   /** q160: IVF index drift monitor ([[Similarity.ivfDrift]]) — the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 import graft.dsl.Records
+import graft.stream.CheckpointFiles
 
 /** Source/sink builders producing record-shaped DataFrames — the physical
   * layer behind [[graft.dsl.Entity.Topic]] (the reference's topics,
@@ -201,18 +202,23 @@ object Sources {
     * present in this sandbox — the serde halves are covered by the
     * MemoryStream stand-in test; only the broker I/O itself is not). */
   def kafkaSinkTopic(df: DataFrame, bootstrap: String, topic: String,
-      checkpoint: String): StreamingQuery =
+      checkpoint: String): StreamingQuery = {
+    CheckpointFiles.install(df.sparkSession)
     encodeKafkaRecords(df)
       .writeStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrap)
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   /** Streaming parquet sink with checkpointing; `availableNow` processes
-    * the backlog and stops (the batch-replay trigger). */
+    * the backlog and stops (the batch-replay trigger). Like every stream
+    * starter here, it installs [[CheckpointFiles]]' fork-free checkpoint
+    * manager unless the session names one. */
   def writeStreamTopic(df: DataFrame, path: String, checkpoint: String,
       availableNow: Boolean = false): StreamingQuery = {
+    CheckpointFiles.install(df.sparkSession)
     val w: DataStreamWriter[Row] = df.writeStream
       .format("parquet").option("path", path)
       .option("checkpointLocation", checkpoint)

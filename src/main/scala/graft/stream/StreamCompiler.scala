@@ -238,6 +238,9 @@ object StreamCompiler extends org.apache.spark.internal.Logging {
     *                     ([[StateStore.RocksDB]] for production key
     *                     cardinality; set on the sources' session, applies
     *                     to queries started after this call)
+    *
+    * Also installs [[CheckpointFiles]]' fork-free checkpoint manager on the
+    * sources' session unless the session already names one.
     */
   def run(
       topology: Topology,
@@ -260,13 +263,15 @@ object StreamCompiler extends org.apache.spark.internal.Logging {
         conf.set(ProviderConfKey, cls)
       }
     }
-    // always name the EFFECTIVE provider (r10 verdict task 6): the sticky
-    // session conf decides for every query started after this call, so
-    // make it visible even when Inherit left it untouched
+    // always name the EFFECTIVE provider and checkpoint file manager: the
+    // sticky session conf decides for every query started after this
+    // call, so make it visible even when Inherit left it untouched
     (streams.values ++ statics.values).headOption.foreach { df =>
+      CheckpointFiles.install(df.sparkSession)
       logInfo("state-store provider for queries of this topology: " +
         df.sparkSession.conf.getOption(ProviderConfKey)
-          .getOrElse("<Spark default: HDFSBackedStateStoreProvider>"))
+          .getOrElse("<Spark default: HDFSBackedStateStoreProvider>") +
+        "; checkpoint file manager: " + CheckpointFiles.effective(df.sparkSession))
     }
     val order = Dag.topsort(topology.workflow).get
     val preds = topology.predecessors

@@ -846,6 +846,7 @@ object Streamed {
     new org.apache.hadoop.fs.Path(stagingDir).getFileSystem(
       session.sparkContext.hadoopConfiguration)
       .mkdirs(new org.apache.hadoop.fs.Path(stagingDir))
+    CheckpointFiles.install(session)
     val front = incoming.writeStream.outputMode("append")
       .option("checkpointLocation", ckptFront)
       .foreachBatch(graft.sources.Sources.idempotentBatchWriter(
@@ -966,6 +967,7 @@ object Streamed {
       sink: org.apache.spark.sql.DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val session = incoming.sparkSession
+    CheckpointFiles.install(session)
     incoming.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(graft.sources.Sources.idempotentBatchWriter(
@@ -1015,6 +1017,7 @@ object Streamed {
       sink: org.apache.spark.sql.DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val session = incoming.sparkSession
+    CheckpointFiles.install(session)
     incoming.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch(graft.sources.Sources.idempotentBatchWriter(
@@ -1041,7 +1044,8 @@ object Streamed {
       refIndex: org.apache.spark.sql.DataFrame, idCol: String,
       text: org.apache.spark.sql.Column, n: Int, checkpoint: String)(
       sink: org.apache.spark.sql.DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    CheckpointFiles.install(incoming.sparkSession)
     incoming.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch {
@@ -1052,4 +1056,5 @@ object Streamed {
           }
           ()
       }.start()
+  }
 }

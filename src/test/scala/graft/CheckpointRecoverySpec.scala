@@ -1151,4 +1151,85 @@ class CheckpointRecoverySpec extends AnyFunSuite with org.scalatest.BeforeAndAft
       assert(kv(buf2) == Seq(("k", 7)))
     }
   }
+
+  /** Feed the running-fold topology through one checkpoint, one query
+    * incarnation per entry of `managers` (the session's
+    * checkpoint-manager conf for that incarnation; None = Spark's
+    * default), one micro-batch each, and return every (key, value) the
+    * sink saw, in emission order. */
+  private def restartsAcrossManagers(managers: Seq[Option[String]],
+      store: StreamCompiler.StateStore): (String, Seq[(String, Int)]) = {
+    implicit val sql = spark.sqlContext
+    val key = graft.stream.CheckpointFiles.ConfKey
+    val topo = Topology(
+      Seq("in" -> "tbl", "tbl" -> "out"),
+      Map("in" -> Entity.Topic("in"),
+        "tbl" -> Entity.KTable(aggregate =
+          Some(AggSpec.FoldAgg(lit(0), (acc, v) => acc * 2 + v))),
+        "out" -> Entity.Topic("out")))
+    val ms = MemoryStream[(String, Int, Long)]
+    val dir = ckpt()
+    val prior = spark.conf.getOption(key)
+    val seen = try managers.zipWithIndex.flatMap { case (m, i) =>
+      m.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val dfs = StreamCompiler.withStateStore(spark, store) {
+        StreamCompiler.run(topo, Map("in" -> src(ms)))
+      }
+      val buf = ArrayBuffer.empty[Row]
+      StreamCompiler.withStateStore(spark, store) {
+        val q = start(dfs("tbl"), dir, "update", buf)
+        try {
+          ms.addData(("k", i + 1, 1000L + i), (s"j${i % 2}", 10 * (i + 1), 1000L + i))
+          q.processAllAvailable()
+        } finally q.stop()
+      }
+      kv(buf).sorted
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    (dir, seen)
+  }
+
+  /** Spark's default manager, named explicitly: the session factory
+    * installs the fork-free one, so unsetting alone would not restore it
+    * once StreamCompiler.run reinstalls it. */
+  private val sparkDefaultManager = Some(classOf[org.apache.spark.sql.execution
+    .streaming.checkpointing.FileContextBasedCheckpointFileManager].getName)
+  private val forkFreeManager = Some(graft.stream.CheckpointFiles.ManagerClass)
+
+  /** Expected emissions of [[restartsAcrossManagers]] over 3 incarnations
+    * of the non-commutative fold 2·acc + v: k 1 → 4 → 11, j0 10 → 50. */
+  private val acrossManagers =
+    Seq(("j0", 10), ("k", 1), ("j1", 20), ("k", 4), ("j0", 50), ("k", 11))
+
+  test("HDFSBacked: a checkpoint resumes across Spark's default and the fork-free checkpoint manager, both ways") {
+    val (_, mixed) = restartsAcrossManagers(
+      Seq(sparkDefaultManager, forkFreeManager, sparkDefaultManager),
+      StreamCompiler.StateStore.HDFSBacked)
+    val (_, plain) = restartsAcrossManagers(Seq.fill(3)(sparkDefaultManager),
+      StreamCompiler.StateStore.HDFSBacked)
+    assert(mixed == plain)
+    assert(mixed == acrossManagers)
+  }
+
+  test("RocksDB + changelog: a checkpoint resumes across Spark's default and the fork-free checkpoint manager, both ways") {
+    val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val prior = spark.conf.getOption(ck)
+    try {
+      spark.conf.set(ck, "true")
+      val (dir, mixed) = restartsAcrossManagers(
+        Seq(forkFreeManager, sparkDefaultManager, forkFreeManager),
+        StreamCompiler.StateStore.RocksDB)
+      val (_, plain) = restartsAcrossManagers(Seq.fill(3)(sparkDefaultManager),
+        StreamCompiler.StateStore.RocksDB)
+      assert(mixed == plain)
+      assert(mixed == acrossManagers)
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      val changelogs = try walk.iterator().asScala
+        .count(_.getFileName.toString.endsWith(".changelog")) finally walk.close()
+      assert(changelogs > 0, s"no *.changelog files under $dir")
+    } finally prior match {
+      case Some(p) => spark.conf.set(ck, p)
+      case None    => spark.conf.unset(ck)
+    }
+  }
 }

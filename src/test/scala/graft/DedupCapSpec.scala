@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Dedup
+import org.apache.spark.sql.DataFrame
+import graft.ops.{CacheScope, Dedup}
 
 /** The LSH bucket-size cap: a degenerate corpus (many near-identical
   * docs → one huge band/sign bucket) must not go O(bucket²); capped runs
@@ -150,5 +151,29 @@ class DedupCapSpec extends AnyFunSuite {
     assert(nc >= 1L)
     assert(row.getLong(3) === 10000L / nc * 1L || row.getLong(3) === (nh * 10000L) / nc)
     assert(row.getLong(4) === 10000L)
+  }
+
+  test("span-cut memory guard: a document past MaxChunksPerDoc positions fails fast on every entry point") {
+    // one more position than the guard allows: (MaxChunksPerDoc + n - 1)
+    // tokens give MaxChunksPerDoc + 1 shingle positions
+    val n = 8
+    val huge = Seq.fill((Dedup.MaxChunksPerDoc + n).toInt)("w").mkString(" ")
+    val docs = Seq((1L, "a small ordinary document with more than eight words in it"),
+      (42L, huge)).toDF("doc_id", "text")
+    // the reference shares a shingle with the huge document, so no join
+    // side is empty and the incoming explode has to run
+    val ref = Seq((7L, Seq.fill(n)("w").mkString(" "))).toDF("doc_id", "text")
+    def failure(op: String)(run: CacheScope => DataFrame): Unit = {
+      val e = intercept[Exception](CacheScope.using(sc => run(sc).collect()))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      val want = s"$op: more than ${Dedup.MaxChunksPerDoc} positions in doc 42"
+      assert(msgs.exists(_.contains(want)), s"no '$want' in: ${msgs.mkString(" | ").take(600)}")
+    }
+    failure("spanCutDedup")(sc => Dedup.spanCutDedup(docs, "doc_id", col("text"), n, scope = sc))
+    failure("spanCutAgainst")(sc =>
+      Dedup.spanCutAgainst(docs, ref, "doc_id", col("text"), n, sc))
+    failure("spanCutAgainstIndex")(sc => Dedup.spanCutAgainstIndex(docs,
+      Dedup.spanIndexKeys(ref, col("text"), n), "doc_id", col("text"), n, sc))
   }
 }
